@@ -31,9 +31,11 @@ SURVEY.md §4 "minimal feature shipping"):
   O(N·K̄·dim) per iteration, via an equi-join against the persisted
   active-points table — the DataFrame equivalent of the reference's
   self-message + sampled-reverse feature routing (NND.scala:142-197);
-- the O(|A(v)|²) pairwise scoring runs in a numpy kernel inside
-  ``applyInPandas`` (Arrow-batched, BLAS matmul) — pairs are never
-  materialized as shuffle rows;
+- the O(|A(v)|²) pairwise scoring runs in a numpy kernel (BLAS
+  matmul) over whole Arrow batches of groups — ``mapInArrow`` on input
+  exchanged and sorted by group key, so one Python call serves many
+  groups (:func:`_map_groups`) — and pairs are never materialized as
+  shuffle rows;
 - per-iteration ``localCheckpoint`` truncates the growing logical plan
   (SURVEY.md A13 — the one thing the DataFrame port needs that the RDD
   version didn't).
@@ -44,12 +46,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_nnd_spark.schemas import normalize_points, validate_points
+from spark_nnd_spark.schemas import InvalidPointsError, normalize_points, validate_points
 
 _CAND_SCHEMA = T.StructType(
     [
@@ -58,6 +60,10 @@ _CAND_SCHEMA = T.StructType(
         T.StructField("sim", T.DoubleType()),
     ]
 )
+# Kernel output rows gathered per Arrow batch handed back to Spark.
+_OUT_ROWS = 1 << 16
+# Local-join kernel inputs, member id first (the in-group sort key).
+_JOIN_COLUMNS = ["member", "member_features", "is_new", "kth_sim"]
 
 # Working-graph neighbor entries carry an `is_new` flag (incremental search).
 _WORK_NEIGHBOR = T.ArrayType(
@@ -82,17 +88,19 @@ _OUT_NEIGHBOR = T.ArrayType(
 
 def _init_kernel(seed: int, k: int):
     """Per-bucket random init (NND.scala:95-102): each member samples K
-    neighbors with replacement, scores them, drops self-edges. Seeded by
-    (seed, bucket) → deterministic, unlike the reference's global Random.
+    neighbors with replacement, scores them, drops self-edges.
+
+    Deterministic, unlike the reference's global Random: the draw is
+    seeded by (seed, bucket) and indexes the bucket's members in
+    ascending id order (:func:`_map_groups` sorts every group by id), so
+    the candidates are a function of the bucket's member set alone —
+    not of the input's physical row order.
     """
 
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
+    def kernel(bucket: int, ids: np.ndarray, feats: np.ndarray):
+        m = len(ids)
         if m < 2:
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
-        bucket = int(key[0])
-        ids = pdf["id"].to_numpy(np.int64)
-        feats = np.stack(pdf["features"].to_numpy()).astype(np.float64)
+            return None
         rng = np.random.default_rng([seed & 0x7FFFFFFF, bucket & 0x7FFFFFFFFFFF])
         # K draws with replacement per member (reference semantics).
         draws = rng.integers(0, m, size=(m, k))
@@ -101,10 +109,10 @@ def _init_kernel(seed: int, k: int):
         mask = src != dst
         src, dst = src[mask], dst[mask]
         if len(src) == 0:
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
+            return None
         diff = feats[src] - feats[dst]
         sims = 1.0 / (1.0 + np.sqrt((diff * diff).sum(axis=1)))
-        return pd.DataFrame({"id": ids[src], "nb_id": ids[dst], "sim": sims})
+        return ids[src], ids[dst], sims
 
     return kernel
 
@@ -135,19 +143,20 @@ def _local_join_kernel(k: int):
     """
     cap = 2 * k
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["member"].to_numpy(np.int64)
-        isnew = pdf["is_new"].to_numpy(bool)
+    def kernel(
+        _v: int, ids: np.ndarray, member_feats: np.ndarray,
+        isnew: np.ndarray, kth_sim: np.ndarray,
+    ):
         uniq, first_idx, inv = np.unique(ids, return_index=True, return_inverse=True)
         m = len(uniq)
         if m < 2:
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
+            return None
         new_u = np.zeros(m, dtype=bool)
         np.logical_or.at(new_u, inv, isnew)
         if not new_u.any():
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
-        feats = np.stack(pdf["member_features"].to_numpy()).astype(np.float64)[first_idx]
-        thr = pdf["kth_sim"].to_numpy(np.float64)[first_idx]
+            return None
+        feats = member_feats[first_idx]
+        thr = kth_sim[first_idx]
 
         new_idx = np.flatnonzero(new_u)
         n_new = len(new_idx)
@@ -195,16 +204,117 @@ def _local_join_kernel(k: int):
                 out_sim.append(cs[cmask])
 
         if not out_id:
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
-        return pd.DataFrame(
-            {
-                "id": np.concatenate(out_id),
-                "nb_id": np.concatenate(out_nb),
-                "sim": np.concatenate(out_sim),
-            }
-        )
+            return None
+        return np.concatenate(out_id), np.concatenate(out_nb), np.concatenate(out_sim)
 
     return kernel
+
+
+def _batch_columns(batch: pa.RecordBatch, names: list[str]) -> list:
+    """One Arrow batch's columns as numpy: a scalar column as a 1-D
+    array, a list column as (row offsets from 0, flat values)."""
+    cols = []
+    for name in names:
+        arr = batch.column(name)
+        if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
+            if arr.null_count:
+                raise InvalidPointsError(f"{arr.null_count} rows have null {name}")
+            # offsets index the unsliced child array, so slice values by them
+            offs = arr.offsets.to_numpy()
+            vals = arr.values.to_numpy(zero_copy_only=False)[offs[0]:offs[-1]]
+            cols.append((offs - offs[0], vals))
+        else:
+            cols.append(arr.to_numpy(zero_copy_only=False))
+    return cols
+
+
+def _group_columns(pieces: list) -> list[np.ndarray]:
+    """Concatenate one group's row ranges ``(cols, lo, hi)`` — one range
+    per batch the group spans — into its arrays; a list column becomes
+    an (m, dim) float64 matrix, dim taken from the list offsets."""
+    out = []
+    for j, first in enumerate(pieces[0][0]):
+        if not isinstance(first, tuple):
+            out.append(np.concatenate([cols[j][lo:hi] for cols, lo, hi in pieces]))
+            continue
+        lens = np.concatenate([np.diff(cols[j][0][lo:hi + 1]) for cols, lo, hi in pieces])
+        vals = np.concatenate(
+            [cols[j][1][cols[j][0][lo]:cols[j][0][hi]] for cols, lo, hi in pieces],
+            dtype=np.float64,
+        )
+        dim = int(lens[0])
+        if (lens != dim).any():
+            # a bare reshape would silently mis-slice ragged rows
+            raise InvalidPointsError(
+                "inconsistent feature dimensionality: row lengths "
+                f"{sorted(set(lens.tolist()))} in one group"
+            )
+        out.append(vals.reshape(len(lens), dim))
+    return out
+
+
+def _iter_groups(batches, key: str, columns: list[str]):
+    """Yield ``(key value, arrays)`` once per group of a stream of Arrow
+    batches sorted by ``key``, ``arrays`` being the group's ``columns``
+    (see :func:`_group_columns`). A batch's last group may continue in
+    the next batch, so it is held back until a later batch starts
+    another key or the stream ends."""
+    pending, pending_key = [], None
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        keys = batch.column(key).to_numpy()
+        cols = _batch_columns(batch, columns)
+        cuts = np.flatnonzero(keys[1:] != keys[:-1]) + 1
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, n]):
+            if pending and keys[lo] != pending_key:
+                yield int(pending_key), _group_columns(pending)
+                pending = []
+            pending.append((cols, lo, hi))
+            pending_key = keys[lo]
+    if pending:
+        yield int(pending_key), _group_columns(pending)
+
+
+def _run_groups(batches, key: str, columns: list[str], kernel):
+    """Apply ``kernel`` to every group of ``batches`` and stream its
+    (id, nb_id, sim) outputs back, gathered into Arrow batches of about
+    ``_OUT_ROWS`` rows."""
+    outs, rows = [], 0
+    for value, arrays in _iter_groups(batches, key, columns):
+        out = kernel(value, *arrays)
+        if out is None:
+            continue
+        outs.append(out)
+        rows += len(out[0])
+        if rows >= _OUT_ROWS:
+            yield _cand_batch(outs)
+            outs, rows = [], 0
+    if outs:
+        yield _cand_batch(outs)
+
+
+def _cand_batch(outs: list) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.concatenate(col)) for col in zip(*outs)],
+        names=_CAND_SCHEMA.fieldNames(),
+    )
+
+
+def _map_groups(df: DataFrame, key: str, columns: list[str], kernel) -> DataFrame:
+    """Candidate edges from ``kernel(key value, *column arrays)`` run once
+    per ``key`` group of ``df`` — the one grouped-kernel path of the
+    init and the local join. Each group arrives whole and sorted by
+    ``columns[0]`` (the member id), and each Python call takes whole
+    Arrow batches of many groups: one exchange on ``key`` as a
+    ``groupBy(key)`` would make, without a round trip per group."""
+    return (
+        df.select(key, *columns)
+        .repartition(key)
+        .sortWithinPartitions(key, columns[0])
+        .mapInArrow(lambda batches: _run_groups(batches, key, columns, kernel), _CAND_SCHEMA)
+    )
 
 
 def _merge_top_k(edges: DataFrame, k: int) -> DataFrame:
@@ -310,9 +420,7 @@ def build_graph(
     )
 
     # --- A6/A7: in-bucket random init + per-node top-K merge -----------
-    init_cands = members.groupBy("bucket").applyInPandas(
-        _init_kernel(seed, k), _CAND_SCHEMA
-    )
+    init_cands = _map_groups(members, "bucket", ["id", "features"], _init_kernel(seed, k))
     graph = _merge_top_k(init_cands.withColumn("is_b", F.lit(False)), k)
     graph = graph.localCheckpoint(eager=True)
 
@@ -421,12 +529,10 @@ def _descend(
         feats_iter = feats.join(kth, "member", "left").withColumn(
             "kth_sim", F.coalesce("kth_sim", F.lit(float("-inf")))
         )
-        adj_feat = adj.join(feats_iter, "member").select(
-            "v", "member", "member_features", "is_new", "kth_sim"
-        )
+        adj_feat = adj.join(feats_iter, "member")
 
         # A11: local join (numpy kernel) → id-only candidate stream.
-        cands = adj_feat.groupBy("v").applyInPandas(_local_join_kernel(k), _CAND_SCHEMA)
+        cands = _map_groups(adj_feat, "v", _JOIN_COLUMNS, _local_join_kernel(k))
 
         old_edges = graph.select(
             F.col("id"), F.explode("neighbors").alias("nb")
@@ -643,14 +749,12 @@ def _descend_sparse(
             .join(kth, "member", "left")
             .withColumn("kth_sim", F.coalesce("kth_sim", F.lit(float("-inf"))))
         )
-        adj_feat = adj.join(feats_iter, "member").select(
-            "v", "member", "member_features", "is_new", "kth_sim"
-        )
+        adj_feat = adj.join(feats_iter, "member")
 
         # A11 over live groups; checkpoint — the stream is read twice
         # (affected ids + merge input) and is O(touched·K) small.
-        cands = adj_feat.groupBy("v").applyInPandas(
-            _local_join_kernel(k), _CAND_SCHEMA
+        cands = _map_groups(
+            adj_feat, "v", _JOIN_COLUMNS, _local_join_kernel(k)
         ).localCheckpoint(eager=True)
         affected = cands.select("id").distinct().localCheckpoint(eager=True)
         aff_b = F.broadcast(affected)
@@ -759,9 +863,7 @@ def _update_core(
         .distinct()
     )
     members = members.join(F.broadcast(live_buckets), "bucket", "left_semi")
-    init_cands = members.groupBy("bucket").applyInPandas(
-        _init_kernel(seed, k), _CAND_SCHEMA
-    )
+    init_cands = _map_groups(members, "bucket", ["id", "features"], _init_kernel(seed, k))
     # Drop candidates where both endpoints are old (their graph entries
     # are already converged; re-initializing them would only add noise).
     new_flag = F.broadcast(new_ids.withColumn("__new", F.lit(True)))

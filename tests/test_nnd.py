@@ -143,6 +143,53 @@ def test_exact_graph_tiebreak_with_mass_duplicates(spark):
         assert all(n["similarity"] == 1.0 for n in got[i])
 
 
+def test_build_independent_of_row_layout(spark):
+    """Same points, different physical layouts and Arrow batch sizes:
+    identical neighbor lists (bit-identical similarities) and identical
+    per-iteration update counts. The init kernel draws over each bucket's
+    members in id order, not in arrival order."""
+    rows = make_clustered_points(n_clusters=8, per_cluster=25, dim=16, seed=5)
+    sc = spark.sparkContext
+    by_id = spark.createDataFrame(sc.parallelize(rows, 4), POINT_DDL)
+    layouts = {
+        "id order": by_id,
+        "reversed": spark.createDataFrame(sc.parallelize(rows[::-1], 4), POINT_DDL),
+        "hashed": by_id.repartition(7, F.xxhash64("id")),
+        "shuffled": by_id.orderBy(F.rand(13)).coalesce(3),
+    }
+
+    def run(df):
+        updates = []
+        g = build_graph(df, k=5, max_iterations=4, early_termination=0.0, seed=11,
+                        on_iteration=lambda i, u: updates.append(u))
+        lists = sorted(
+            (r["id"], tuple((n["id"], n["similarity"]) for n in r["neighbors"]))
+            for r in g.collect()
+        )
+        return lists, updates
+
+    want = run(layouts.pop("id order"))
+    for name, df in layouts.items():
+        assert run(df) == want, name
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        assert run(by_id) == want, "7-row Arrow batches"
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_ragged_features_fail_loudly_without_validation(spark):
+    """validate=False skips the up-front check; ragged rows that meet in a
+    kernel group still fail instead of being mis-sliced."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0], 0, 0, False), (1, [4.0], 0, 0, False)], POINT_DDL
+    )
+    with pytest.raises(Exception, match="inconsistent feature dimensionality"):
+        build_graph(df, k=1, max_iterations=1, validate=False).collect()
+
+
 def test_update_graph_incremental(spark):
     from spark_nnd_spark.nnd.descent import update_graph
 
